@@ -70,19 +70,9 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    // release the board-run memos (dedup truth/cluster checkpoints,
-    // storage layout dirs) before teardown — nothing may outlive the run
-    graft.ext.DedupOps.clearCaches()
-    graft.ops.Storage.clearCaches()
-    graft.ops.FuzzyJoin.clearCaches()
-    graft.streaming.StreamOps.clearCaches()
-    graft.ext.SimilarityOps.clearCaches()
-    graft.ext.TextOps.clearCaches()
-    graft.ext.ClassifierOps.clearCaches()
-    graft.ext.MediaPayloads.clearCaches()
-    graft.pipeline.VotePipeline.clearCaches()
-    graft.SparkEntry.clearCaches()
-    graft.Tables.clearCaches()
+    // release the board-run memos before teardown — nothing may outlive
+    // the run
+    SessionMemo.clearAll()
     spark.stop()
   }
 }

@@ -3,6 +3,8 @@ package graft.ext
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.SessionMemo
+
 /** Near-duplicate detection for a training-data pipeline ([X] tier):
   * n-gram Jaccard, MinHash+LSH, SimHash. Exact dedup is
   * [[graft.ops.Dedup.exactByContent]].
@@ -44,20 +46,6 @@ object DedupOps {
           s"transform(sequence(0, size(words) - $n), i -> concat_ws(' ', slice(words, i + 1, $n)))")))
           .as("shingle"))
 
-  /** The inverted-index PAIR PASS shared by the whole exact-similarity
-    * family: per-pair shared-shingle counts `common` (doc_a < doc_b,
-    * n_common — the Σ df(shingle)² join) and per-doc shingle sizes
-    * (doc_id, n_sh), both checkpointed and memoized per (session, input
-    * plan, n, maxDf). Jaccard, containment, the recall truths, and the
-    * cluster edges are all cheap arithmetic over these two frames, and
-    * before this memo each graded consumer re-ran the full Σ df² join —
-    * the single most expensive shuffle on the board — from the shared
-    * shingle checkpoint. Same sweep/bound hygiene as the truth memo;
-    * correctness never depends on a hit. */
-  private val commonCache = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, Int, Int, Long),
-    (DataFrame, DataFrame)]()
-
   /** The pair pass as a PLAN (uncheckpointed) — [[commonCounts]]'s
     * builder, and the surface `ShuffleKeySpec` audits for the
     * fingerprint-key discipline (the checkpointed frames a consumer
@@ -81,7 +69,7 @@ object DedupOps {
     // maxDf cap) lets the (doc_a, doc_b) count complete in place.
     // Interleaved in-JVM A/B at 32 cores on the memoized shingle input:
     // 2.60-3.08 s -> 1.58-2.18 s for the full pair pass, 1 130 536 rows
-    // identical (OPTIMIZATION_r18.md).
+    // identical (plans/r18/dedup_paircount_{before,after}.txt).
     val parts = docs.sparkSession.sessionState.conf.numShufflePartitions
     val common = a.join(b, shKey)
       .filter(col("doc_a") < col("doc_b"))
@@ -91,21 +79,22 @@ object DedupOps {
     (common, sizes)
   }
 
+  /** The inverted-index PAIR PASS shared by the whole exact-similarity
+    * family: per-pair shared-shingle counts `common` (doc_a < doc_b,
+    * n_common — the Σ df(shingle)² join) and per-doc shingle sizes
+    * (doc_id, n_sh), both checkpointed and memoized per (session, input
+    * plan, n, maxDf). Jaccard, containment, the recall truths, and the
+    * cluster edges are all cheap arithmetic over these two frames, and
+    * before this memo each graded consumer re-ran the full Σ df² join —
+    * the single most expensive shuffle on the board — from the shared
+    * shingle checkpoint. Correctness never depends on a hit. */
   private def commonCounts(docs: DataFrame, n: Int,
-                           maxDf: Long): (DataFrame, DataFrame) = {
-    sweep(commonCache)
-    val key =
-      (docs.sparkSession, docs.queryExecution.analyzed.semanticHash(), n, maxDf)
-    val hit = commonCache.get(key)
-    if (hit != null) hit
-    else {
-      // compute OUTSIDE the map lock (same discipline as truthCache)
+                           maxDf: Long): (DataFrame, DataFrame) =
+    SessionMemo(docs.sparkSession, "DedupOps.commonCounts",
+        (SessionMemo.planOf(docs), n, maxDf)) {
       val (common, sizes) = commonCountsPlan(docs, n, maxDf)
-      val built = (common.localCheckpoint(), sizes.localCheckpoint())
-      val prev = commonCache.putIfAbsent(key, built)
-      if (prev != null) prev else built
+      (common.localCheckpoint(), sizes.localCheckpoint())
     }
-  }
 
   /** Exact n-gram Jaccard over every pair sharing ≥1 shingle:
     * inverted-index join on shingle, then |A∩B| / (|A|+|B|-|A∩B|).
@@ -164,80 +153,23 @@ object DedupOps {
   def ngramJaccardPairsAbove(docs: DataFrame, n: Int, tau: Double): DataFrame =
     ngramJaccardPairs(docs, n).filter(col("jaccard") >= tau)
 
-  private val truthCache = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, Int, Int, Double), DataFrame]()
-
-  /** Memo-cache hygiene shared by [[truthCache]] and [[clusterCache]]:
-    * entries are keyed by the owning SparkSession, and a stopped session's
-    * checkpoints are unreachable garbage — sweep them on every access so
-    * spec suites that build/stop many sessions can't pin them for the JVM
-    * lifetime. `maxEntries` bounds each map outright (the graded board
-    * needs a handful of entries; hitting the bound means a runaway caller,
-    * and dropping the memo only costs recompute, never correctness). */
-  private val maxEntries = 64
-  private def sweep[K <: Product, V](
-      m: java.util.concurrent.ConcurrentHashMap[K, V]): Unit = {
-    val it = m.keySet.iterator()
-    while (it.hasNext) it.next().productElement(0) match {
-      case s: org.apache.spark.sql.SparkSession
-        if s.sparkContext.isStopped => it.remove()
-      case _ => ()
-    }
-    if (m.size > maxEntries) m.clear()
-  }
-
-  /** Drop every memoized truth/cluster/shingle frame. Verify/Bench call
-    * this after the query loop so the checkpoint blocks don't outlive
-    * the board run. */
-  def clearCaches(): Unit = {
-    truthCache.clear(); clusterCache.clear(); shingleCache.clear()
-    commonCache.clear(); minhashSigCache.clear()
-    // the corpus index seals by persist, not checkpoint — unpersist so a
-    // long-lived session (ScaleBench clears per rep) doesn't accumulate
-    // orphaned cache blocks
-    val it = corpusIndexCache.values.iterator()
-    while (it.hasNext) {
-      val ci = it.next()
-      try {
-        ci.digests.unpersist(false); ci.sh.unpersist(false)
-        ci.sz.unpersist(false)
-      } catch { case _: Throwable => () }
-    }
-    corpusIndexCache.clear()
-  }
-
-  /** Test hook (R17OptimizationSpec): partition widths of the memoized
-    * shingle checkpoints — pins the spread-before-seal property. */
-  private[graft] def shingleMemoWidths: Seq[Int] = {
-    import scala.jdk.CollectionConverters._
-    shingleCache.values.asScala.map(_.rdd.getNumPartitions).toSeq
-  }
-
-  private val shingleCache = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, Int, Int), DataFrame]()
-
   /** The materialized shingle set, memoized per (session, input plan, n):
     * the split+explode over the full corpus is the common prefix of the
     * whole exact-similarity family (Jaccard pairs, containment, the
     * recall truths, the corpus pipeline's near-dup stage), and each of
     * those already needs it localCheckpoint'd for its own multi-consumer
     * plan — serving the same checkpoint across the family removes the
-    * recompute without changing any result. Same sweep/bound hygiene as
-    * the truth memo; correctness never depends on a hit.
+    * recompute without changing any result. Correctness never depends
+    * on a hit.
     *
     * Stores `(doc_id, shingle_h, shingle_l)` — the [[fingerprinted]]
     * key pair, never the raw n-gram string: both consumers
     * ([[ngramJaccardPairs]], [[containmentTopPairs]]) only ever
     * group/join on the shingle, so the checkpoint AND every downstream
     * shuffle carry 12-byte keys instead of ~80-byte strings. */
-  private[graft] def shinglesCheckpointed(docs: DataFrame, n: Int): DataFrame = {
-    sweep(shingleCache)
-    val key =
-      (docs.sparkSession, docs.queryExecution.analyzed.semanticHash(), n)
-    val hit = shingleCache.get(key)
-    if (hit != null) hit
-    else {
-      // compute OUTSIDE the map lock (same discipline as truthCache).
+  private[graft] def shinglesCheckpointed(docs: DataFrame, n: Int): DataFrame =
+    SessionMemo(docs.sparkSession, "DedupOps.shingles",
+        (SessionMemo.planOf(docs), n)) {
       // r17: spread the checkpoint across the session's cores before
       // sealing — the explode-only lineage inherits the corpus scan's
       // split count (ONE for a single-row-group local file), so every
@@ -252,44 +184,30 @@ object DedupOps {
       // doc_id: uniform, deterministic. One-time build cost inside the
       // memo; the explode and the checkpoint then materialize evenly
       // across the session's cores.
-      val built = fingerprinted(
-          shingles(docs.repartition(
-            docs.sparkSession.sparkContext.defaultParallelism,
-            col("doc_id")), n), "shingle")
+      fingerprinted(
+        shingles(docs.repartition(
+          docs.sparkSession.sparkContext.defaultParallelism,
+          col("doc_id")), n), "shingle")
         .localCheckpoint()
-      val prev = shingleCache.putIfAbsent(key, built)
-      if (prev != null) prev else built
     }
-  }
 
   /** The exact-Jaccard ≥ `tau` truth pairs, memoized per (session, input
     * plan, n, tau). The truth is the Σ df² inverted-index join — the
     * expensive side of every sketch-recall audit — and THREE graded
     * consumers need the identical set (minhash recall, simhash recall,
     * cluster edges), so it is built once and served as a query-scoped
-    * `localCheckpoint`. The cache key uses the ANALYZED PLAN's
-    * `semanticHash` (content identity), not the DataFrame reference —
+    * `localCheckpoint`. The cache key uses the canonicalized ANALYZED
+    * PLAN (content identity), not the DataFrame reference —
     * two reads of the same parquet dir hit the same entry, while a
     * different corpus (or different n/tau) can never be served a stale
     * truth. */
   private[graft] def truthPairsAbove(docs: DataFrame, n: Int,
-                                     tau: Double): DataFrame = {
-    sweep(truthCache)
-    val key =
-      (docs.sparkSession, docs.queryExecution.analyzed.semanticHash(), n, tau)
-    val hit = truthCache.get(key)
-    if (hit != null) hit
-    else {
-      // compute OUTSIDE the map lock — computeIfAbsent would run the full
-      // inverted-index join while holding the bin lock, serializing every
-      // concurrent caller behind it. A rare duplicate compute loses the
-      // race benignly: its checkpoint blocks are session-scoped.
-      val built = ngramJaccardPairsAbove(docs, n, tau)
+                                     tau: Double): DataFrame =
+    SessionMemo(docs.sparkSession, "DedupOps.truthPairs",
+        (SessionMemo.planOf(docs), n, tau)) {
+      ngramJaccardPairsAbove(docs, n, tau)
         .select("doc_a", "doc_b").localCheckpoint()
-      val prev = truthCache.putIfAbsent(key, built)
-      if (prev != null) prev else built
     }
-  }
 
   /** Differential recall of a candidate-pair set against the exact-Jaccard
     * truth at threshold `tau`: emits the truth size (which an external SQL
@@ -380,22 +298,11 @@ object DedupOps {
     * every round O(|edges|). Output: (doc_id, cluster_id) for every doc
     * in at least one pair. */
   def duplicateClusters(docs: DataFrame, n: Int, tau: Double,
-                        iters: Int = 6): DataFrame = {
-    sweep(clusterCache)
-    val key = (docs.sparkSession, docs.queryExecution.analyzed.semanticHash(),
-      n, tau, iters)
-    val hit = clusterCache.get(key)
-    if (hit != null) hit
-    else {
-      // multi-round propagation runs outside the lock (see truthPairsAbove)
-      val built = duplicateClustersUncached(docs, n, tau, iters)
-      val prev = clusterCache.putIfAbsent(key, built)
-      if (prev != null) prev else built
+                        iters: Int = 6): DataFrame =
+    SessionMemo(docs.sparkSession, "DedupOps.clusters",
+        (SessionMemo.planOf(docs), n, tau, iters)) {
+      duplicateClustersUncached(docs, n, tau, iters)
     }
-  }
-
-  private val clusterCache = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, Int, Int, Double, Int), DataFrame]()
 
   private def duplicateClustersUncached(docs: DataFrame, n: Int, tau: Double,
                                         iters: Int): DataFrame = {
@@ -621,19 +528,18 @@ object DedupOps {
     * share one build; ScaleBench still measures the cold standalone
     * cost (it clears every memo per repetition). */
   final case class CorpusIndex(digests: DataFrame, sh: DataFrame,
-                               sz: DataFrame)
-  private val corpusIndexCache = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession,
-      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int),
-    CorpusIndex]()
+                               sz: DataFrame) extends SessionMemo.Releasable {
+    // sealed by persist, not checkpoint: unpersist on eviction so a
+    // long-lived session (ScaleBench clears per rep) doesn't accumulate
+    // orphaned cache blocks
+    def release(): Unit = {
+      digests.unpersist(false); sh.unpersist(false); sz.unpersist(false); ()
+    }
+  }
 
-  def corpusIndex(corpus: DataFrame, n: Int): CorpusIndex = {
-    sweep(corpusIndexCache)
-    val key = (corpus.sparkSession,
-      corpus.queryExecution.analyzed.canonicalized, n)
-    val hit = corpusIndexCache.get(key)
-    if (hit != null) hit
-    else {
+  def corpusIndex(corpus: DataFrame, n: Int): CorpusIndex =
+    SessionMemo(corpus.sparkSession, "DedupOps.corpusIndex",
+        (SessionMemo.planOf(corpus), n)) {
       // pre-partition (and pre-sort) every index side ON ITS JOIN KEY
       // before sealing, with an EXPLICIT partition count, and seal by
       // CACHING, not checkpointing: InMemoryTableScan advertises the
@@ -663,11 +569,8 @@ object DedupOps {
         .sortWithinPartitions("shingle_h", "shingle_l"))
       val sz = seal(sh.groupBy("doc_id").agg(count(lit(1)).as("n_b"))
         .repartition(parts, col("doc_id")))
-      val built = CorpusIndex(digests, sh, sz)
-      val prev = corpusIndexCache.putIfAbsent(key, built)
-      if (prev != null) prev else built
+      CorpusIndex(digests, sh, sz)
     }
-  }
 
   /** [[incrementalDedup]] served from a pre-built [[CorpusIndex]] — the
     * streaming ingest form (t53): each micro-batch triages against the
@@ -707,7 +610,7 @@ object DedupOps {
     // the increment), so the partition count tracks the session's
     // configured shuffle width, never a local constant. Interleaved
     // in-JVM A/B at 32 cores: shipped 1.12–2.00 s vs 0.90–1.38 s per
-    // batch, rows identical (OPTIMIZATION_r18.md).
+    // batch, rows identical (plans/r18/t53_triage_{before,after}.txt).
     val parts = increment.sparkSession.sessionState.conf.numShufflePartitions
     val nearDup = shInc.select((col("doc_id").as("inc_id") +: shKey.map(col)): _*)
       .join(idx.sh.select((col("doc_id").as("corp_id") +: shKey.map(col)): _*),
@@ -811,24 +714,13 @@ object DedupOps {
     // precision-graded bandings spend the SAME 16-hash budget (8×2 vs
     // 4×4), so the shingle explode + numHashes min-aggregates — the
     // heavy half of both seats — is one computation serving both (the
-    // shingleCache discipline; banding happens downstream per config).
+    // shingle memo's discipline; banding happens downstream per config).
     // doc_id + numHashes longs per doc, localCheckpoint'd.
-    sweep(minhashSigCache)
-    val key = (docs.sparkSession,
-      docs.queryExecution.analyzed.canonicalized, n, numHashes)
-    val hit = minhashSigCache.get(key)
-    if (hit != null) hit
-    else {
-      val built = minHashSignaturesUncached(docs, n, numHashes).localCheckpoint()
-      val prev = minhashSigCache.putIfAbsent(key, built)
-      if (prev != null) prev else built
+    SessionMemo(docs.sparkSession, "DedupOps.minhashSignatures",
+        (SessionMemo.planOf(docs), n, numHashes)) {
+      minHashSignaturesUncached(docs, n, numHashes).localCheckpoint()
     }
   }
-
-  private val minhashSigCache = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession,
-      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int, Int),
-    DataFrame]()
 
   private[graft] def minHashSignaturesUncached(docs: DataFrame, n: Int,
                                                numHashes: Int): DataFrame = {

@@ -333,27 +333,13 @@ object SimilarityOps {
   /** One codebook build per (session, input plan, m) — the family's
     * three entry points (and rerank's nesting) otherwise repeat the
     * corpus-wide centroid aggregation + driver collect and the pool
-    * count() on every call. Same memo discipline as the Storage layout
-    * dirs and the streaming IVF ingest; released by [[clearCaches]]. */
-  private val pqMemo = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession,
-      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int),
-    (DataFrame, Array[(Long, Array[Double])], Int, Long)]()
-
-  /** Release the PQ codebook memos (Verify/Bench teardown). */
-  def clearCaches(): Unit = pqMemo.clear()
-
+    * count() on every call. */
   private def pqCodesAndBooks(embeddings: DataFrame, m: Int)
       : (DataFrame, Array[(Long, Array[Double])], Int, Long) =
-    // keyed on the session OBJECT (identity) and the canonicalized plan
-    // OBJECT (structural equality — includes LocalRelation data, which
-    // both a 32-bit semanticHash and the plan's toString can miss), so
-    // a collision can never silently serve codebooks built from a
-    // different input
-    pqMemo.computeIfAbsent(
-      (embeddings.sparkSession,
-        embeddings.queryExecution.analyzed.canonicalized, m),
-      { _ => pqCodesAndBooksUncached(embeddings, m) })
+    graft.SessionMemo(embeddings.sparkSession, "SimilarityOps.pqCodebooks",
+        (graft.SessionMemo.planOf(embeddings), m)) {
+      pqCodesAndBooksUncached(embeddings, m)
+    }
 
   private def pqCodesAndBooksUncached(embeddings: DataFrame, m: Int)
       : (DataFrame, Array[(Long, Array[Double])], Int, Long) = {

@@ -614,27 +614,13 @@ object TextOps {
   /** One trained merge table per (session, input plan, nMerges) — the
     * encode seat ([[bpeEncode]]) applies the same merges the train seat
     * ([[bpeMerges]]) learns, and re-running the 8-round loop for the
-    * apply would double the board's cost for zero information (the
-    * pqMemo discipline, including its key: session OBJECT +
-    * canonicalized plan OBJECT). Released by [[clearCaches]]. */
-  private val bpeMemo = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession,
-      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int),
-    Seq[(Int, String, String, String, Long)]]()
-
-  /** Release the BPE training memos (Verify/Bench teardown). */
-  def clearCaches(): Unit = bpeMemo.clear()
-
+    * apply would double the board's cost for zero information. */
   private def bpeTrain(docs: DataFrame,
                        nMerges: Int): Seq[(Int, String, String, String, Long)] =
-    // keyed on the canonicalized plan OBJECT (structural case-class
-    // equality — for a LocalRelation that includes the DATA, which its
-    // toString omits; for scans, the normalized paths), so two
-    // same-schema in-memory fixtures can never collide
-    bpeMemo.computeIfAbsent(
-      (docs.sparkSession,
-        docs.queryExecution.analyzed.canonicalized, nMerges),
-      { _ => bpeTrainUncached(docs, nMerges) })
+    graft.SessionMemo(docs.sparkSession, "TextOps.bpeMerges",
+        (graft.SessionMemo.planOf(docs), nMerges)) {
+      bpeTrainUncached(docs, nMerges)
+    }
 
   def bpeMerges(docs: DataFrame, nMerges: Int): DataFrame = {
     val spark = docs.sparkSession

@@ -19,19 +19,13 @@ import org.apache.spark.sql.SparkSession
   * kind): the three consumers of a staged dir share one write. */
 object MediaFiles {
 
-  private val dirs =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String, String), String]()
-
   private def staged(spark: SparkSession, sfDir: String, kind: String)
                     (write: (SparkSession, String) => Unit): String =
-    dirs.compute((System.identityHashCode(spark), sfDir, kind), { (_, cur) =>
-      if (cur != null && new java.io.File(cur).exists()) cur
-      else {
-        val dir = graft.TmpDirs.create(s"graft_files_${kind}_").toString
-        write(spark, dir)
-        dir
-      }
-    })
+    graft.SessionMemo.stagedDir(spark, "MediaFiles.staged", (sfDir, kind)) {
+      val dir = graft.TmpDirs.create(s"graft_files_${kind}_").toString
+      write(spark, dir)
+      dir
+    }
 
   /** One `<doc_id>.bin` file per document holding the UTF-8 text bytes. */
   def textFileDir(spark: SparkSession, sfDir: String): String =

@@ -4,9 +4,11 @@ import java.nio.file.Files
 import java.sql.Timestamp
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+
+import graft.SessionMemo
 
 /** Structured-Streaming realizations of the reference pipeline (SURVEY.md
   * §2.8). The reference's Spark job is truncated right before these stages
@@ -31,7 +33,7 @@ object StreamOps {
                       event_type: String, value: Double)
 
   private val nameCounter = new AtomicLong(0)
-  private def freshName(prefix: String): String =
+  private[graft] def freshName(prefix: String): String =
     s"${prefix}_${nameCounter.incrementAndGet()}"
 
   /** Streaming view of the events table via the parquet *file stream
@@ -43,11 +45,9 @@ object StreamOps {
     * sources require it) by a one-time probe of the static file — the
     * testdata's physical `ts` type has varied across generations — and
     * normalized to TimestampType in-plan (see
-    * [[graft.Tables.normalizeTs]]). */
-  private val topicDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** The file stream source consumes a *directory* (a "topic" that receives
+    * [[graft.Tables.normalizeTs]]).
+    *
+    * The file stream source consumes a *directory* (a "topic" that receives
     * files over time). The driver fixture is a single read-only file, so
     * expose it through a symlinked topic dir — zero copy, driver does O(1)
     * work. A SCALED fixture (`tools.ScaleUp`) writes `events.parquet` as a
@@ -59,10 +59,10 @@ object StreamOps {
     * insensitive). Symlinking a directory whole would silently yield an
     * EMPTY stream — zero batches, vacuous results (the round-14 scaling
     * run caught exactly that). */
-  private def eventsTopicDir(dir: String): String =
-    topicDirs.computeIfAbsent(dir, { d =>
+  private def eventsTopicDir(spark: SparkSession, dir: String): String =
+    SessionMemo(spark, "StreamOps.eventsTopic", dir) {
       val topic = graft.TmpDirs.create("graft_events_topic_")
-      val src = java.nio.file.Paths.get(s"$d/events.parquet")
+      val src = java.nio.file.Paths.get(s"$dir/events.parquet")
       if (Files.isDirectory(src)) {
         Option(src.toFile.listFiles()).getOrElse(Array.empty)
           .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
@@ -72,7 +72,7 @@ object StreamOps {
         Files.createSymbolicLink(topic.resolve("events.parquet"), src)
       }
       topic.toString
-    })
+    }
 
   /** Two-phase topic staging shared by the kill/restart, late-drop, and
     * watermarked-dedup harnesses: write `df` as ONE parquet file into the
@@ -131,108 +131,73 @@ object StreamOps {
       .getOrElse(sys.error(s"empty-stage write produced no part under $dir"))
   }
 
-  /** One-pass parity split of the events table — the shared staged
-    * layout behind every two-phase durability harness (t1 kill/restart,
-    * s9 file-sink exactly-once, s10 wire-emit replay, t27 state
-    * readback): each streams the even half, then the odd half, of the
-    * SAME five-column projection. Memoized per (session, fixture dir) —
-    * the split is written ONCE per session (a single partitioned write,
-    * the t4 one-pass staging pattern) and each harness hard-links the
-    * part files into its own topic dir at its arrival points, so the
-    * per-harness staging cost drops from two full scans + two writes +
-    * two fsync-heavy commits to two O(1) link calls. The links are
-    * fresh paths per topic, so each query's offset log tracks its own
-    * arrivals; the shared bytes are immutable. */
-  private val parityStageMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (java.nio.file.Path, java.nio.file.Path)]()
-
-  private def parityStagedFiles(spark: SparkSession, dir: String)
+  /** One-pass two-way split of `rows` into two single-file staged
+    * arrivals, memoized per (session, fixture dir, split name): ONE
+    * partitioned write on `bucket` (0 or 1 per row — the t4 one-pass
+    * staging pattern), and each harness hard-links the part files into
+    * its own topic dir at its arrival points, so the per-harness staging
+    * cost is two O(1) link calls instead of two scans + two writes. The
+    * links are fresh paths per topic, so each query's offset log tracks
+    * its own arrivals; the shared bytes are immutable. `bucket` is built
+    * inside the memoized write, so a split that needs a job to find its
+    * boundary (the time split) runs that job once per session too. */
+  private def stagedSplit(spark: SparkSession, dir: String, name: String,
+                          rows: => DataFrame, bucket: DataFrame => Column)
       : (java.nio.file.Path, java.nio.file.Path) =
-    parityStageMemo.computeIfAbsent((spark, dir), { _ =>
-      val root = graft.TmpDirs.create("graft_parity_stage_")
+    SessionMemo(spark, s"StreamOps.split.$name", dir) {
+      val root = graft.TmpDirs.create(s"graft_${name}_stage_")
       val staged = root.resolve("staged")
-      val ev = graft.Tables.events(spark, dir)
-        .select("event_id", "ts", "user_id", "event_type", "value")
-      ev.withColumn("__par", pmod(col("event_id"), lit(2)))
-        .coalesce(1)
-        .write.partitionBy("__par").parquet(staged.toString)
-      def part(parity: Int): java.nio.file.Path = {
-        val fs = Option(staged.resolve(s"__par=$parity").toFile.listFiles())
-          .getOrElse(Array.empty).filter(_.getName.endsWith(".parquet"))
-        require(fs.length <= 1,
-          s"parity stage __par=$parity: ${fs.length} part files — " +
-            "the staging write must coalesce(1)")
-        fs.headOption.map(_.toPath).getOrElse(
-          // degenerate fixture: this parity half is EMPTY (no partition
-          // dir written) — stage a zero-row arrival rather than crash
-          stageEmptySinglePart(root.resolve(s"empty_$parity"), ev))
-      }
-      (part(0), part(1))
-    })
-
-  /** One-pass parity split of the DOCUMENTS table (doc_id, text only —
-    * the streamed corpus front end needs nothing else) — the staged
-    * layout behind [[streamingCanonicalDedup]], memoized per (session,
-    * fixture dir) like [[parityStagedFiles]]. */
-  private val docParityMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (java.nio.file.Path, java.nio.file.Path)]()
-
-  private def docParityStagedFiles(spark: SparkSession, dir: String)
-      : (java.nio.file.Path, java.nio.file.Path) =
-    docParityMemo.computeIfAbsent((spark, dir), { _ =>
-      val root = graft.TmpDirs.create("graft_docparity_stage_")
-      val staged = root.resolve("staged")
-      val docs = graft.Tables.documents(spark, dir).select("doc_id", "text")
-      docs.withColumn("__par", pmod(col("doc_id"), lit(2)))
-        .coalesce(1)
-        .write.partitionBy("__par").parquet(staged.toString)
-      def part(parity: Int): java.nio.file.Path = {
-        val fs = Option(staged.resolve(s"__par=$parity").toFile.listFiles())
-          .getOrElse(Array.empty).filter(_.getName.endsWith(".parquet"))
-        require(fs.length <= 1,
-          s"doc parity stage __par=$parity: ${fs.length} part files — " +
-            "the staging write must coalesce(1)")
-        fs.headOption.map(_.toPath).getOrElse(
-          stageEmptySinglePart(root.resolve(s"empty_$parity"), docs))
-      }
-      (part(0), part(1))
-    })
-
-  /** One-pass USER-keyed split of the events table (`user_id % 3 != 0`
-    * vs the rest) — the staged layout behind the seats whose second
-    * batch must introduce NEW state keys (t41 time-travel). Memoized per
-    * (session, fixture dir) like [[parityStagedFiles]]. */
-  private val userSplitMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (java.nio.file.Path, java.nio.file.Path)]()
-
-  private def userSplitStagedFiles(spark: SparkSession, dir: String)
-      : (java.nio.file.Path, java.nio.file.Path) =
-    userSplitMemo.computeIfAbsent((spark, dir), { _ =>
-      val root = graft.TmpDirs.create("graft_usersplit_stage_")
-      val staged = root.resolve("staged")
-      val ev = graft.Tables.events(spark, dir)
-        .select("event_id", "ts", "user_id", "event_type", "value")
-      ev.withColumn("__b",
-          when(pmod(col("user_id"), lit(3)) =!= 0, 0).otherwise(1))
+      val df = rows
+      df.withColumn("__b", bucket(df))
         .coalesce(1)
         .write.partitionBy("__b").parquet(staged.toString)
       def part(b: Int): java.nio.file.Path = {
         val fs = Option(staged.resolve(s"__b=$b").toFile.listFiles())
           .getOrElse(Array.empty).filter(_.getName.endsWith(".parquet"))
         require(fs.length <= 1,
-          s"user split __b=$b: ${fs.length} part files — " +
+          s"$name stage __b=$b: ${fs.length} part files — " +
             "the staging write must coalesce(1)")
         fs.headOption.map(_.toPath).getOrElse(
-          // degenerate fixture: this half is empty — stage a zero-row
-          // arrival rather than crash (the parityStagedFiles contract)
-          stageEmptySinglePart(root.resolve(s"empty_$b"), ev))
+          // degenerate fixture: this half is EMPTY (no partition dir
+          // written) — stage a zero-row arrival rather than crash
+          stageEmptySinglePart(root.resolve(s"empty_$b"), df))
       }
       (part(0), part(1))
-    })
+    }
 
-  /** One-pass TIME split of the events table at the midpoint of its ts
-    * range — the staged layout behind the session seats (t9/t44), whose
-    * graded property is session_window state MERGING ACROSS micro-batches.
+  private def eventColumns(spark: SparkSession, dir: String): DataFrame =
+    graft.Tables.events(spark, dir)
+      .select("event_id", "ts", "user_id", "event_type", "value")
+
+  /** Even then odd `event_id` half of the five-column events projection —
+    * the shared staged layout behind every two-phase durability harness
+    * (t1 kill/restart, s9 file-sink exactly-once, s10 wire-emit replay,
+    * t27 state readback). */
+  private def parityStagedFiles(spark: SparkSession, dir: String)
+      : (java.nio.file.Path, java.nio.file.Path) =
+    stagedSplit(spark, dir, "parity", eventColumns(spark, dir),
+      _ => pmod(col("event_id"), lit(2)))
+
+  /** Parity split of the DOCUMENTS table (doc_id, text only — the
+    * streamed corpus front end needs nothing else) — the staged layout
+    * behind [[streamingCanonicalDedup]]. */
+  private def docParityStagedFiles(spark: SparkSession, dir: String)
+      : (java.nio.file.Path, java.nio.file.Path) =
+    stagedSplit(spark, dir, "docparity",
+      graft.Tables.documents(spark, dir).select("doc_id", "text"),
+      _ => pmod(col("doc_id"), lit(2)))
+
+  /** USER-keyed split of the events table (`user_id % 3 != 0` vs the
+    * rest) — the staged layout behind the seats whose second batch must
+    * introduce NEW state keys (t41 time-travel). */
+  private def userSplitStagedFiles(spark: SparkSession, dir: String)
+      : (java.nio.file.Path, java.nio.file.Path) =
+    stagedSplit(spark, dir, "usersplit", eventColumns(spark, dir),
+      _ => when(pmod(col("user_id"), lit(3)) =!= 0, 0).otherwise(1))
+
+  /** TIME split of the events table at the midpoint of its ts range —
+    * the staged layout behind the session seats (t9/t44), whose graded
+    * property is session_window state MERGING ACROSS micro-batches.
     * A parity split cannot pace those seats: each parity half spans the
     * full ts range, so after the first half's batch the watermark sits at
     * max(ts) − delay and the second half's rows arrive LATE and are
@@ -240,39 +205,18 @@ object StreamOps {
     * keeps every second-batch row ahead of the first batch's watermark
     * (ts > boundary > boundary − delay), while sessions whose events
     * straddle the boundary genuinely merge across the two batches —
-    * the t13/t19/t22 cross-batch discipline, now real for sessions too.
-    * Memoized per (session, fixture dir) like [[parityStagedFiles]]. */
-  private val timeSplitMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (java.nio.file.Path, java.nio.file.Path)]()
-
+    * the t13/t19/t22 cross-batch discipline, now real for sessions too. */
   private def timeSplitStagedFiles(spark: SparkSession, dir: String)
       : (java.nio.file.Path, java.nio.file.Path) =
-    timeSplitMemo.computeIfAbsent((spark, dir), { _ =>
-      val root = graft.TmpDirs.create("graft_timesplit_stage_")
-      val staged = root.resolve("staged")
-      val ev = graft.Tables.events(spark, dir)
-        .select("event_id", "ts", "user_id", "event_type", "value")
+    stagedSplit(spark, dir, "timesplit", eventColumns(spark, dir), { ev =>
       // one bounded (min, max) scalar pair to the driver — the split
       // boundary; epoch-0 fallback keeps the degenerate empty fixture on
-      // the stageEmptySinglePart path below
+      // the stageEmptySinglePart path
       val r = ev.agg(min("ts"), max("ts")).head()
       val boundaryMs =
         if (r.isNullAt(0)) 0L
         else (r.getTimestamp(0).getTime + r.getTimestamp(1).getTime) / 2
-      ev.withColumn("__h",
-          when(col("ts") <= lit(new Timestamp(boundaryMs)), 0).otherwise(1))
-        .coalesce(1)
-        .write.partitionBy("__h").parquet(staged.toString)
-      def part(h: Int): java.nio.file.Path = {
-        val fs = Option(staged.resolve(s"__h=$h").toFile.listFiles())
-          .getOrElse(Array.empty).filter(_.getName.endsWith(".parquet"))
-        require(fs.length <= 1,
-          s"time split __h=$h: ${fs.length} part files — " +
-            "the staging write must coalesce(1)")
-        fs.headOption.map(_.toPath).getOrElse(
-          stageEmptySinglePart(root.resolve(s"empty_$h"), ev))
-      }
-      (part(0), part(1))
+      when(col("ts") <= lit(new Timestamp(boundaryMs)), 0).otherwise(1)
     })
 
   /** Land a staged file in `topic` as arrival `name` — a hard link
@@ -309,12 +253,9 @@ object StreamOps {
     * topic dirs are SHARED across every join in the session — the
     * per-query source cost drops from two full-table scans to two
     * type-only three-column scans. */
-  private val typeTopicMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), Map[String, java.nio.file.Path]]()
-
   private def typedTopicDirs(spark: SparkSession, dir: String)
       : Map[String, java.nio.file.Path] =
-    typeTopicMemo.computeIfAbsent((spark, dir), { _ =>
+    SessionMemo(spark, "StreamOps.typeTopic", dir) {
       val root = graft.TmpDirs.create("graft_type_topics_")
       val staged = root.resolve("staged")
       val types = Seq("click", "purchase")
@@ -335,7 +276,7 @@ object StreamOps {
         }
         t -> topic
       }.toMap
-    })
+    }
 
   /** Stream of ONE event type from the staged split — the staged file's
     * ts was written post-[[graft.Tables.normalizeTs]], so a plain
@@ -354,13 +295,6 @@ object StreamOps {
     (root, topic)
   }
 
-  /** The probed physical `ts` type per fixture dir — the footer read costs
-    * a listing + schema job per call, and every streaming query starts by
-    * building this source, so memoize it (the fixture file is immutable
-    * for the life of the process). */
-  private val tsDecls =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Arrival-metering knob (`SPARK_GRAFT_STREAM_MAX_FILES`), parsed
     * once with a validating error: a malformed value used to surface as
     * a bare NumberFormatException deep inside stream construction with
@@ -378,9 +312,11 @@ object StreamOps {
     // File sources need a declared schema; probe the static fixture once
     // (footer-only read) so the declaration matches the file's physical
     // ts type, then normalize in-plan exactly like the batch reader.
-    val tsDecl = tsDecls.computeIfAbsent(dir, { d =>
-      spark.read.parquet(s"$d/events.parquet").schema("ts").dataType.sql
-    })
+    // Memoized: the footer read costs a listing + schema job per call,
+    // and every streaming query starts by building this source.
+    val tsDecl = SessionMemo(spark, "StreamOps.tsDecl", dir) {
+      spark.read.parquet(s"$dir/events.parquet").schema("ts").dataType.sql
+    }
     graft.Tables.normalizeTs(
       spark.readStream
         .schema(s"event_id BIGINT, ts $tsDecl, user_id BIGINT, event_type STRING, value DOUBLE, props STRING")
@@ -390,7 +326,7 @@ object StreamOps {
         // scaling harness to SEPARATE per-row cost from per-batch commit
         // machinery — e.g. 32 collapses the scaled topic to one batch
         .option("maxFilesPerTrigger", streamMaxFiles)
-        .parquet(eventsTopicDir(dir)))
+        .parquet(eventsTopicDir(spark, dir)))
   }
 
   /** Run `body` with `spark.sql.shuffle.partitions` temporarily set to
@@ -1204,8 +1140,6 @@ object StreamOps {
     * item). */
   private final case class CorpusRun(out: String, topic: java.nio.file.Path,
                                      recoverCkpt: String, recoverOut: String)
-  private val corpusRunMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int), CorpusRun]()
 
   /** `tolerateVanishing` is for CHECKPOINT trees only: the HDFS state
     * store's MAINTENANCE thread may rename a .snapshot temp file
@@ -1231,7 +1165,7 @@ object StreamOps {
 
   private def corpusFrontEndRun(spark: SparkSession, dir: String,
                                 width: Int): CorpusRun =
-    corpusRunMemo.computeIfAbsent((spark, dir, width), { _ =>
+    SessionMemo(spark, "StreamOps.corpusRun", (dir, width)) {
       withNoDataBatchesOff(spark) { withShufflePartitions(spark, Some(width)) {
         val (root, topic) = freshTopic("graft_t45_")
         val (even, odd) = docParityStagedFiles(spark, dir)
@@ -1261,7 +1195,7 @@ object StreamOps {
         } finally q.stop()
         CorpusRun(out, topic, recoverCkpt.toString, recoverOut.toString)
       } }
-    })
+    }
 
   /** T46: MULTI-QUERY CONCURRENCY — two independent stateful streaming
     * queries over the SAME topic, running CONCURRENTLY in one
@@ -1356,11 +1290,9 @@ object StreamOps {
     * Memoized so a post-board resample doesn't re-drive the stream
     * against an already-consumed checkpoint (the seat is flagged
     * `resampled_memoized` in the bench artifact). */
-  private val corpusRecoverMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int), String]()
   private def corpusRecoverRun(spark: SparkSession, dir: String,
                                width: Int): String =
-    corpusRecoverMemo.computeIfAbsent((spark, dir, width), { _ =>
+    SessionMemo(spark, "StreamOps.corpusRecover", (dir, width)) {
       val run = corpusFrontEndRun(spark, dir, width)
       withNoDataBatchesOff(spark) { withShufflePartitions(spark, Some(width)) {
         val q2 = startDigestFold(gatedDigestUpdates(spark, run.topic),
@@ -1368,7 +1300,7 @@ object StreamOps {
         try q2.processAllAvailable() finally q2.stop()
       } }
       run.recoverOut
-    })
+    }
 
   /** T49: BOUNDED-STATE corpus front end — the watermark/TTL-evicted
     * sibling of [[streamingCanonicalDedup]], closing the one remaining
@@ -1444,11 +1376,9 @@ object StreamOps {
     * groups); batch 1 re-delivers the whole table at the late anchor.
     * Each arrival is ONE file, so the batch split — and therefore the
     * watermark schedule the oracle replays — is exact. */
-  private val t49StageMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (java.nio.file.Path, java.nio.file.Path)]()
   private def t49StagedFiles(spark: SparkSession, dir: String)
       : (java.nio.file.Path, java.nio.file.Path) =
-    t49StageMemo.computeIfAbsent((spark, dir), { _ =>
+    SessionMemo(spark, "StreamOps.t49Stage", dir) {
       val root = graft.TmpDirs.create("graft_t49_stage_")
       val docs = graft.Tables.documents(spark, dir).select("doc_id", "text")
       stageTopicFile(root, root, "arrival0", docs.withColumn("ts",
@@ -1457,7 +1387,7 @@ object StreamOps {
       stageTopicFile(root, root, "arrival1", docs.withColumn("ts",
         expr("timestamp'2024-01-11 00:00:00'")))
       (root.resolve("arrival0.parquet"), root.resolve("arrival1.parquet"))
-    })
+    }
 
   /** T50: STREAMING MULTIMODAL INGEST GATE — the mm tier's batch
     * kernels applied on the continuous path a 100 TB multimodal
@@ -1512,11 +1442,9 @@ object StreamOps {
     * reader sees a valid magic and no IHDR), split into two single-file
     * arrivals by doc parity so the admission counters provably update
     * across a batch boundary. */
-  private val t50StageMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (java.nio.file.Path, java.nio.file.Path)]()
   private def t50StagedFiles(spark: SparkSession, dir: String)
       : (java.nio.file.Path, java.nio.file.Path) =
-    t50StageMemo.computeIfAbsent((spark, dir), { _ =>
+    SessionMemo(spark, "StreamOps.t50Stage", dir) {
       val root = graft.TmpDirs.create("graft_t50_stage_")
       val pay = graft.ext.MediaPayloads.payload(spark, dir, "png")
         .withColumn("media_bytes",
@@ -1528,7 +1456,7 @@ object StreamOps {
       stageTopicFile(root, root, "arrival1",
         pay.filter(pmod(col("doc_id"), lit(2)) === 1))
       (root.resolve("arrival0.parquet"), root.resolve("arrival1.parquet"))
-    })
+    }
 
   /** T54: STREAMING AUDIO INGEST GATE — the t50 discipline applied to
     * the audio modality, so the mm tier's continuous path covers more
@@ -1580,11 +1508,9 @@ object StreamOps {
     * truncated to its 8-byte RIFF prefix (a REAL undecodable stub),
     * split into two single-file arrivals by doc parity so the
     * admission counters provably update across a batch boundary. */
-  private val t54StageMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (java.nio.file.Path, java.nio.file.Path)]()
   private def t54StagedFiles(spark: SparkSession, dir: String)
       : (java.nio.file.Path, java.nio.file.Path) =
-    t54StageMemo.computeIfAbsent((spark, dir), { _ =>
+    SessionMemo(spark, "StreamOps.t54Stage", dir) {
       val root = graft.TmpDirs.create("graft_t54_stage_")
       val pay = graft.ext.MediaPayloads.payload(spark, dir, "wav")
         .withColumn("media_bytes",
@@ -1596,7 +1522,7 @@ object StreamOps {
       stageTopicFile(root, root, "arrival1",
         pay.filter(pmod(col("doc_id"), lit(2)) === 1))
       (root.resolve("arrival0.parquet"), root.resolve("arrival1.parquet"))
-    })
+    }
 
   /** T55: STREAMING VIDEO INGEST GATE — the third codec family on the
     * continuous path, completing the t50 (image) / t54 (audio)
@@ -1654,11 +1580,9 @@ object StreamOps {
     * 8-byte RIFF prefix, split into two single-file arrivals by
     * doc_id % 4 parity so both arrivals carry clips AND corrupt
     * payloads across a batch boundary. */
-  private val t55StageMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (java.nio.file.Path, java.nio.file.Path)]()
   private def t55StagedFiles(spark: SparkSession, dir: String)
       : (java.nio.file.Path, java.nio.file.Path) =
-    t55StageMemo.computeIfAbsent((spark, dir), { _ =>
+    SessionMemo(spark, "StreamOps.t55Stage", dir) {
       val root = graft.TmpDirs.create("graft_t55_stage_")
       val pay = graft.ext.MediaPayloads.payload(spark, dir, "avi")
         .withColumn("media_bytes",
@@ -1670,7 +1594,7 @@ object StreamOps {
       stageTopicFile(root, root, "arrival1",
         pay.filter(pmod(col("doc_id"), lit(4)) === 2))
       (root.resolve("arrival0.parquet"), root.resolve("arrival1.parquet"))
-    })
+    }
 
   /** T51: STREAM-SIDE SCHEMA DRIFT on the corpus front end — a new
     * column starts arriving mid-topic (the r16 verdict's thin-surface
@@ -1715,18 +1639,16 @@ object StreamOps {
     * new `lang` column), memoized per (session, fixture) — the narrow
     * pre-drift arrival reuses [[docParityStagedFiles]]' even file
     * as-is, so only this one staging write is t51's own. */
-  private val t51StageMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), java.nio.file.Path]()
   private def t51StagedWideFile(spark: SparkSession,
                                 dir: String): java.nio.file.Path =
-    t51StageMemo.computeIfAbsent((spark, dir), { _ =>
+    SessionMemo(spark, "StreamOps.t51Stage", dir) {
       val root = graft.TmpDirs.create("graft_t51_stage_")
       stageTopicFile(root, root, "arrival1",
         graft.Tables.documents(spark, dir)
           .filter(pmod(col("doc_id"), lit(2)) === 1)
           .select("doc_id", "text", "lang"))
       root.resolve("arrival1.parquet")
-    })
+    }
 
   /** T53: STREAMING INCREMENTAL DEDUP — the batch `dedup_incremental`
     * triage run the way a production crawler actually runs it: the new
@@ -1798,11 +1720,9 @@ object StreamOps {
     * the dedup_incremental fixture's increment (new docs + re-keyed
     * recrawls) split into two single-file arrivals so the triage
     * provably spans a batch boundary. */
-  private val t53StageMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (java.nio.file.Path, java.nio.file.Path)]()
   private def t53StagedFiles(spark: SparkSession, dir: String)
       : (java.nio.file.Path, java.nio.file.Path) =
-    t53StageMemo.computeIfAbsent((spark, dir), { _ =>
+    SessionMemo(spark, "StreamOps.t53Stage", dir) {
       val root = graft.TmpDirs.create("graft_t53_stage_")
       val docs = graft.Tables.documents(spark, dir)
       val corpus = docs.filter(pmod(col("doc_id"), lit(5)) =!= 0)
@@ -1815,7 +1735,7 @@ object StreamOps {
       stageTopicFile(root, root, "arrival1",
         increment.filter(pmod(col("doc_id"), lit(2)) === 1))
       (root.resolve("arrival0.parquet"), root.resolve("arrival1.parquet"))
-    })
+    }
 
   /** T48: TWO-HOP streaming pipeline chained through an exactly-once
     * FILE SINK — the multi-job topology a 100 TB platform actually
@@ -1880,12 +1800,10 @@ object StreamOps {
     * seats are flagged `resampled_memoized` in the bench artifact. */
   private final case class TwoHopRun(table: String, rowsAOut: Long,
                                      rowsBIn: Long)
-  private val twoHopRunMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int), TwoHopRun]()
 
   private def twoHopRun(spark: SparkSession, dir: String,
                         width: Int): TwoHopRun =
-    twoHopRunMemo.computeIfAbsent((spark, dir, width), { _ =>
+    SessionMemo(spark, "StreamOps.twoHopRun", (dir, width)) {
       withNoDataBatchesOff(spark) { withShufflePartitions(spark, Some(width)) {
         val (root, topic) = freshTopic("graft_t48_")
         val mid = root.resolve("mid").toString
@@ -1939,7 +1857,7 @@ object StreamOps {
         TwoHopRun(tableB, observedSum(qA, "hopA", "rows_out"),
           observedSum(qB, "hopB", "rows_in"))
       } }
-    })
+    }
 
   /** T5: stateful streaming dedup — the engine form of the reference's
     * UNIQUE(voter_id) gate (`/root/reference/main.py:55-59`). Emits each
@@ -1967,12 +1885,9 @@ object StreamOps {
     * the memory sink's temp view outlives the stopped query, and the
     * two paced arrivals guarantee the checkpoint's state crossed a
     * batch boundary (the t27 grading requirement). */
-  private val dedupRunMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int), (String, String)]()
-
   private def dedupPipelineRun(spark: SparkSession, dir: String,
                                width: Int): (String, String) =
-    dedupRunMemo.computeIfAbsent((spark, dir, width), { _ =>
+    SessionMemo(spark, "StreamOps.dedupRun", (dir, width)) {
       withNoDataBatchesOff(spark) { withShufflePartitions(spark, Some(width)) {
         val (root, topic) = freshTopic("graft_t5_")
         val ckpt = root.resolve("ckpt").toString
@@ -1991,7 +1906,7 @@ object StreamOps {
         try q.processAllAvailable() finally q.stop()
         (table, ckpt)
       } }
-    })
+    }
 
   /** The t5 GRADED entry: the shared pipeline run's append emissions
     * (see [[dedupPipelineRun]] — same pipeline, same oracle as
@@ -2087,12 +2002,9 @@ object StreamOps {
     * (never the warm pass). RocksDB provider is inherent — TWS refuses
     * the HDFS-heap provider — and the conf scope closes before the
     * memo returns, so the provider override cannot leak. */
-  private val twsTotalsMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int), (String, String)]()
-
   private def twsTotalsRun(spark: SparkSession, dir: String,
                            width: Int): (String, String) =
-    twsTotalsMemo.computeIfAbsent((spark, dir, width), { _ =>
+    SessionMemo(spark, "StreamOps.twsTotals", (dir, width)) {
       withConf(spark, Map(
         "spark.sql.streaming.stateStore.providerClass" ->
           "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")) {
@@ -2117,7 +2029,7 @@ object StreamOps {
           (table, ckpt)
         } }
       }
-    })
+    }
 
   /** V1 state for [[stateSchemaUpgradeTotals]] — named-field case class,
     * because Avro state-schema evolution resolves fields BY NAME: the V2
@@ -2278,55 +2190,6 @@ object StreamOps {
       .orderBy("user_id")
   }
 
-  /** T29: STREAMING IVF INGEST + SERVE — continuous ingest into the
-    * partitioned IVF layout, then top-k served against the GROWN corpus.
-    * The batch family builds the index once
-    * ([[graft.ext.SimilarityOps.ivfTopKPruned]]); the shape a live corpus
-    * hits next is vectors arriving AFTER the build: the coarse quantizer
-    * stays FIXED (standard IVF — centroids are a build-time artifact;
-    * re-clustering is an offline rebuild), each arriving vector is
-    * assigned to its nearest cell by the same argmax the k-means
-    * assignment uses, and lands in the layout's cell partition.
-    *
-    * Harness: the even-id half of `embeddings` is the sealed base
-    * segment (batch-written, Hive-partitioned by cell = label); its
-    * per-cell centroids are collected once (k·d doubles — bounded,
-    * independent of N). The odd-id half arrives as TWO staged files
-    * (two real micro-batches with a committed offset between) through a
-    * stateless streaming projection — unit-centroid argmax via the
-    * native [[graft.functions.CentroidArgmax]], centroids attached via
-    * a broadcast one-row stream-static join (compile-once, not a
-    * typedlit) — into a parquet sink
-    * partitioned by cell (its own segment dir: a streaming sink owns its
-    * `_spark_metadata` log, so it cannot share the base dir). Serving
-    * reads base ∪ ingest pruned to the `nprobe` probed cells —
-    * `PartitionFilters` on BOTH segments (spec-asserted) — and ranks
-    * cosine top-k. The oracle replays everything: base centroids, the
-    * argmax assignment of the odd half, the probe ranking, and the
-    * post-ingest top-k, so a vector lost in ingest, assigned to the
-    * wrong cell, or served from an unprobed cell goes red. */
-  /** The memoized ingest behind the two t29 serving shapes: one grown
-    * corpus per (session, fixture dir), exactly like the Storage layout
-    * memos — the ingest cost lands on whichever serve runs first (its
-    * graded surface), the second measures pure serving. Cleared by
-    * [[clearCaches]] at driver teardown. */
-  private val ivfIngestMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (String, String, Array[(Long, Array[Double])])]()
-
-  /** Release the per-session ingest layouts and staged parity splits
-    * (Verify/Bench teardown — the DedupOps/Storage clearCaches
-    * discipline). */
-  def clearCaches(): Unit = {
-    ivfIngestMemo.clear(); parityStageMemo.clear(); typeTopicMemo.clear()
-    maxTsMemo.clear(); sentinelMemo.clear()
-    t37WarmMemo.clear(); userSplitMemo.clear(); docParityMemo.clear()
-    timeSplitMemo.clear(); dedupRunMemo.clear(); twsTotalsMemo.clear()
-    corpusRunMemo.clear(); corpusRecoverMemo.clear()
-    twoHopRunMemo.clear(); t49StageMemo.clear(); t50StageMemo.clear()
-    t51StageMemo.clear(); t5bStageMemo.clear(); t53StageMemo.clear()
-    t54StageMemo.clear(); t55StageMemo.clear()
-  }
-
   /** Bench warm hook: materialize the session's memoized staged
     * layouts for `dir` — the parity split (t1/t34/t35/t37/s9/s10) and
     * the typed join topics (t10/t20/t36/t38) — so their ONE-TIME write
@@ -2371,9 +2234,40 @@ object StreamOps {
     }
   }
 
+  /** T29: STREAMING IVF INGEST + SERVE — continuous ingest into the
+    * partitioned IVF layout, then top-k served against the GROWN corpus.
+    * The batch family builds the index once
+    * ([[graft.ext.SimilarityOps.ivfTopKPruned]]); the shape a live corpus
+    * hits next is vectors arriving AFTER the build: the coarse quantizer
+    * stays FIXED (standard IVF — centroids are a build-time artifact;
+    * re-clustering is an offline rebuild), each arriving vector is
+    * assigned to its nearest cell by the same argmax the k-means
+    * assignment uses, and lands in the layout's cell partition.
+    *
+    * Harness: the even-id half of `embeddings` is the sealed base
+    * segment (batch-written, Hive-partitioned by cell = label); its
+    * per-cell centroids are collected once (k·d doubles — bounded,
+    * independent of N). The odd-id half arrives as TWO staged files
+    * (two real micro-batches with a committed offset between) through a
+    * stateless streaming projection — unit-centroid argmax via the
+    * native [[graft.functions.CentroidArgmax]], centroids attached via
+    * a broadcast one-row stream-static join (compile-once, not a
+    * typedlit) — into a parquet sink
+    * partitioned by cell (its own segment dir: a streaming sink owns its
+    * `_spark_metadata` log, so it cannot share the base dir). Serving
+    * reads base ∪ ingest pruned to the `nprobe` probed cells —
+    * `PartitionFilters` on BOTH segments (spec-asserted) — and ranks
+    * cosine top-k. The oracle replays everything: base centroids, the
+    * argmax assignment of the odd half, the probe ranking, and the
+    * post-ingest top-k, so a vector lost in ingest, assigned to the
+    * wrong cell, or served from an unprobed cell goes red. */
+  /** The memoized ingest behind the two t29 serving shapes: one grown
+    * corpus per (session, fixture dir), exactly like the Storage layout
+    * memos — the ingest cost lands on whichever serve runs first (its
+    * graded surface), the second measures pure serving. */
   private def ivfIngestedSegments(spark: SparkSession, dir: String)
       : (String, String, Array[(Long, Array[Double])]) =
-    ivfIngestMemo.computeIfAbsent((spark, dir), { _ =>
+    SessionMemo(spark, "StreamOps.ivfIngest", dir) {
         import graft.ext.SimilarityOps.{vecD, centroidsOf}
         graft.functions.GraftExtensions.register(spark)
         val (root, topic) = freshTopic("graft_t29_")
@@ -2433,7 +2327,7 @@ object StreamOps {
           .outputMode("append").start()
         try q.processAllAvailable() finally q.stop()
         (baseDir, ingestDir, cents)
-      })
+      }
 
   /** The grown corpus: sealed base segment ∪ streamed ingest segment,
     * each Hive-partitioned by cell (explicit schema: the partition
@@ -2719,11 +2613,9 @@ object StreamOps {
   /** The t5b late re-delivery arrival (a third of the users' events,
     * one hour older, fresh event ids), memoized per (session, fixture)
     * like the parity splits. */
-  private val t5bStageMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), java.nio.file.Path]()
   private def t5bRedeliveryFile(spark: SparkSession,
                                 dir: String): java.nio.file.Path =
-    t5bStageMemo.computeIfAbsent((spark, dir), { _ =>
+    SessionMemo(spark, "StreamOps.t5bStage", dir) {
       val root = graft.TmpDirs.create("graft_t5b_stage_")
       stageTopicFile(root, root, "redelivery",
         graft.Tables.events(spark, dir)
@@ -2732,22 +2624,20 @@ object StreamOps {
           .withColumn("ts", col("ts") - expr("INTERVAL 1 HOUR"))
           .withColumn("event_id", col("event_id") + lit(10000000L)))
       root.resolve("redelivery.parquet")
-    })
+    }
 
   /** Max event time per (session, fixture) — the sentinel/finalization
     * anchor several watermark harnesses need (t4, t9, t42, t44). One
     * bounded scalar from a ts-column-only scan, memoized so the board
-    * pays the job once per fixture, not once per seat. */
-  private val maxTsMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), Option[Timestamp]]()
-  /** None iff the events fixture is EMPTY (max over zero rows is null —
-    * the degenerate-fixture case every harness here must survive, per
-    * the [[moveStagedPart]] contract). `computeIfAbsent` would drop a
-    * null mapping, so the memo stores the Option. */
+    * pays the job once per fixture, not once per seat. None iff the
+    * events fixture is EMPTY (max over zero rows is null — the
+    * degenerate-fixture case every harness here must survive, per the
+    * [[moveStagedPart]] contract); the memo stores the Option, never a
+    * null. */
   private[streaming] def maxEventTs(spark: SparkSession, dir: String): Option[Timestamp] =
-    maxTsMemo.computeIfAbsent((spark, dir), { _ =>
+    SessionMemo(spark, "StreamOps.maxTs", dir) {
       Option(graft.Tables.events(spark, dir).agg(max("ts")).head().getTimestamp(0))
-    })
+    }
 
   /** One staged single-row watermark-sentinel parquet file per (session,
     * instant): the sentinel row's CONTENT depends only on its event time
@@ -2756,10 +2646,8 @@ object StreamOps {
     * machinery — is memoized and each harness hard-links the shared
     * immutable file into its own topic as a fresh arrival. t4 and t42
     * both flush at max(ts); t9 and t44 share one far-future anchor. */
-  private val sentinelMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, Long), java.nio.file.Path]()
   private def sentinelFile(spark: SparkSession, atMs: Long): java.nio.file.Path =
-    sentinelMemo.computeIfAbsent((spark, atMs), { _ =>
+    SessionMemo(spark, "StreamOps.sentinel", atMs) {
       val dir = graft.TmpDirs.create("graft_sentinel_")
       val staged = dir.resolve("staged")
       spark.range(1).select(
@@ -2773,7 +2661,7 @@ object StreamOps {
         .find(_.getName.endsWith(".parquet"))
         .map(_.toPath)
         .getOrElse(sys.error(s"sentinel stage produced no part under $staged"))
-    })
+    }
   private def sentinelArrival(spark: SparkSession, atMs: Long,
                               topic: java.nio.file.Path, name: String): Unit =
     linkArrival(sentinelFile(spark, atMs), topic, name)
@@ -3843,10 +3731,8 @@ object StreamOps {
   /** The t37 prior-deployment warm table (departed users' complete
     * history + active users' even half, folded to per-user totals),
     * staged once per (session, fixture) — see [[twsInitialStateTotals]]. */
-  private val t37WarmMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
   private def t37WarmTable(spark: SparkSession, dir: String): DataFrame =
-    t37WarmMemo.computeIfAbsent((spark, dir), { _ =>
+    SessionMemo(spark, "StreamOps.t37Warm", dir) {
       val warmPath = graft.TmpDirs.create("graft_t37_warm_")
         .resolve("warm").toString
       graft.Tables.events(spark, dir)
@@ -3858,7 +3744,7 @@ object StreamOps {
         .agg(count(lit(1)).as("n_events"), sum("cents").as("total_cents"))
         .write.parquet(warmPath)
       spark.read.parquet(warmPath)
-    })
+    }
 
   /** T37: `transformWithState` with **INITIAL STATE** — the warm-start
     * migration a live deployment actually performs: keyed state
@@ -4015,28 +3901,16 @@ object StreamOps {
     spark.table(table)
   }
 
-  /** T12: streaming corpus curation — the LLM tier's scan-side gates
-    * (language-ID + quality, [[graft.ext.TextOps.isEnglishPredicate]] /
-    * [[graft.ext.TextOps.qualityOkPredicate]]) applied to a document
-    * STREAM, with per-language survivor counts maintained in complete
-    * mode. The production shape of "filter the crawl as it lands" —
-    * the gates are pure scan predicates, so they pipeline inside each
-    * micro-batch with zero extra state; the only stateful op is the
-    * small keyed count. Batch/stream parity is exact (same predicate
-    * expressions), which is what lets the batch SQL oracle grade the
-    * streaming execution. */
-  private val docTopicDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   /** The documents table as a file-stream source (symlinked topic dir,
     * same discipline as [[eventsTopicDir]]). */
   private def docStream(spark: SparkSession, dir: String): DataFrame = {
-    val topic = docTopicDirs.computeIfAbsent(dir, { d =>
+    val topic = SessionMemo(spark, "StreamOps.docsTopic", dir) {
       val t = graft.TmpDirs.create("graft_docs_topic_")
       Files.createSymbolicLink(
         t.resolve("documents.parquet"),
-        java.nio.file.Paths.get(s"$d/documents.parquet"))
+        java.nio.file.Paths.get(s"$dir/documents.parquet"))
       t.toString
-    })
+    }
     spark.readStream
       .schema("doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT")
       .option("maxFilesPerTrigger", 1)
@@ -4073,6 +3947,16 @@ object StreamOps {
     spark.table(table).orderBy("lang")
   }
 
+  /** T12: streaming corpus curation — the LLM tier's scan-side gates
+    * (language-ID + quality, [[graft.ext.TextOps.isEnglishPredicate]] /
+    * [[graft.ext.TextOps.qualityOkPredicate]]) applied to a document
+    * STREAM, with per-language survivor counts maintained in complete
+    * mode. The production shape of "filter the crawl as it lands" —
+    * the gates are pure scan predicates, so they pipeline inside each
+    * micro-batch with zero extra state; the only stateful op is the
+    * small keyed count. Batch/stream parity is exact (same predicate
+    * expressions), which is what lets the batch SQL oracle grade the
+    * streaming execution. */
   def streamingQualityGate(spark: SparkSession, dir: String,
                            statePartitions: Option[Int] = None): DataFrame =
       perfScope(spark, statePartitions) {

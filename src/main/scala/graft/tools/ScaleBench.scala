@@ -73,19 +73,6 @@ object ScaleBench {
     .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
     .getOrElse(defaultSeats)
 
-  private def clearAll(): Unit = {
-    graft.ext.DedupOps.clearCaches()
-    graft.ops.Storage.clearCaches()
-    graft.ops.FuzzyJoin.clearCaches()
-    graft.streaming.StreamOps.clearCaches()
-    graft.ext.SimilarityOps.clearCaches()
-    graft.ext.TextOps.clearCaches()
-    graft.ext.ClassifierOps.clearCaches()
-    graft.ext.MediaPayloads.clearCaches()
-    graft.SparkEntry.clearCaches()
-    graft.Tables.clearCaches()
-  }
-
   def main(args: Array[String]): Unit = {
     graft.TmpDirs.install()
     javax.imageio.ImageIO.setUseCache(false)
@@ -125,7 +112,7 @@ object ScaleBench {
 
     def timeSeat(name: String, dir: String): Double =
       (1 to reps).map { _ =>
-        clearAll()
+        graft.SessionMemo.clearAll()
         val t0 = System.nanoTime()
         try { queries(name)(spark, dir).count(); () }
         catch { case e: Throwable =>
@@ -162,7 +149,6 @@ object ScaleBench {
          |""".stripMargin
     java.nio.file.Files.writeString(java.nio.file.Paths.get(outPath), json)
     println(json)
-    clearAll()
     spark.stop()
   }
 }

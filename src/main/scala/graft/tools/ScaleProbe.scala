@@ -61,15 +61,9 @@ object ScaleProbe {
     }
     System.gc()
 
-    def clearAll(): Unit = {
-      graft.ext.DedupOps.clearCaches(); graft.ops.Storage.clearCaches()
-      graft.ops.FuzzyJoin.clearCaches(); graft.streaming.StreamOps.clearCaches()
-      graft.ext.SimilarityOps.clearCaches(); graft.ext.TextOps.clearCaches()
-      graft.ext.ClassifierOps.clearCaches(); graft.Tables.clearCaches()
-    }
     def time(f: String => Long, dir: String): Double =
       (1 to reps).map { _ =>
-        clearAll()
+        graft.SessionMemo.clearAll()
         val t0 = System.nanoTime()
         f(dir)
         (System.nanoTime() - t0) / 1e9
@@ -93,7 +87,6 @@ object ScaleProbe {
          |""".stripMargin
     java.nio.file.Files.writeString(java.nio.file.Paths.get(outPath), json)
     println(json)
-    clearAll()
     spark.stop()
   }
 }

@@ -18,24 +18,29 @@ class R17OptimizationSpec extends SparkSpec {
 
   private val width = spark.sparkContext.defaultParallelism
 
+  /** Partition widths of the checkpoints memoized under `name`. */
+  private def memoWidths(name: String): Seq[Int] =
+    SessionMemo.values(spark, name)
+      .map(_.asInstanceOf[org.apache.spark.sql.DataFrame].rdd.getNumPartitions)
+
   test("fuzzy-join probe memo is sealed at session width, not one partition") {
-    graft.ops.FuzzyJoin.clearCaches()
+    SessionMemo.clearAll()
     val dirty = Seq(1L -> "red widget", 2L -> "blue bolt").toDF("dirty_id", "dirty_name")
     val clean = Seq("red widget", "blue bolt", "hot gear").toDF("entity")
     graft.ops.FuzzyJoin
       .editDistanceJoin(dirty, "dirty_name", Seq("dirty_id"), clean, "entity", 2)
       .count()
-    val widths = graft.ops.FuzzyJoin.memoizedProbeWidths
+    val widths = memoWidths("FuzzyJoin.probes")
     assert(widths.nonEmpty, "probe memo not populated")
     assert(widths.forall(_ == width),
       s"probe checkpoint widths $widths != defaultParallelism $width")
   }
 
   test("shingle memo is sealed at session width, not one partition") {
-    graft.ext.DedupOps.clearCaches()
+    SessionMemo.clearAll()
     val docs = Tables.documents(spark, sfDir)
     graft.ext.DedupOps.ngramJaccardTopPairs(docs, 3, 5).count()
-    val widths = graft.ext.DedupOps.shingleMemoWidths
+    val widths = memoWidths("DedupOps.shingles")
     assert(widths.nonEmpty, "shingle memo not populated")
     assert(widths.forall(_ == width),
       s"shingle checkpoint widths $widths != defaultParallelism $width")

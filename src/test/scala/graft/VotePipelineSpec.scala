@@ -42,4 +42,23 @@ class VotePipelineSpec extends SparkSpec {
     assert(stream === batch,
       "micro-batched state must converge to the batch aggregate")
   }
+
+  test("two concurrent streaming party tallies both run and agree") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val batch = VotePipeline.partyTally(spark, n)
+      .as[(String, Long)].collect().toMap
+    val go = new java.util.concurrent.CountDownLatch(1)
+    val runs = (1 to 2).map { _ =>
+      Future {
+        go.await()
+        VotePipeline.streamingPartyTally(spark, n)
+          .select("party_affiliation", "total_votes")
+          .as[(String, Long)].collect().toMap
+      }
+    }
+    go.countDown()
+    runs.foreach(r => assert(Await.result(r, 5.minutes) === batch))
+  }
 }
