@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Driver-run benchmark: times every SparkEntry query at SPARK_GRAFT_SF_DIR
   * and emits ONE JSON line. The line goes to stdout (driver contract) AND
   * to the file named by SPARK_GRAFT_BENCH_OUT (default
@@ -47,35 +46,23 @@ object Bench {
     "vote_e2e_party_tally", "vote_e2e_turnout_by_state")
 
   def main(args: Array[String]): Unit = {
-    TmpDirs.install()
-    // Explicit here, not only in the codec objects' static init: the
-    // flag must hold for EVERY ImageIO user in this run (incl. Spark's
-    // `image` datasource) regardless of which class loads first.
-    javax.imageio.ImageIO.setUseCache(false)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/tmp/graft_bench.json")
-    // The timed session config lives in TmpDirs.timedSessionBuilder (r18:
-    // one definition shared with Profile/OptProbe — the copies had been
-    // flagged as a drift hazard). AQE ON by default for the timed board
-    // (SPARK_GRAFT_AQE=0 restores static plans): adaptive execution with
-    // post-shuffle coalescing is the production posture, and the measured
-    // A/B on the 139-seat batch slice read 57.2 s (AQE) vs 67.6 s
-    // (static) with the AQE run on the MORE degraded host. The 8 MB
-    // advisory (not the 64 MB default) keeps the genuinely heavy shuffles
-    // parallel: at 64 MB the exploded-shingle inverted-index family
-    // coalesced its REAL work to 1-2 partitions (containment 0.46 ->
-    // 1.10 s); at 8 MB the family recovers while KB-sized stages still
-    // collapse to one task. Streaming queries are unaffected (the engine
-    // disables AQE inside MicroBatchExecution). PLANS.md stays AQE-off:
-    // it audits the static optimizer's plan shape, not runtime
-    // re-planning.
-    val spark = TmpDirs.timedSessionBuilder(cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // r17: the NativeVectorMathRule fusion must be installed in
-    // EVERY driving session (it was previously spec-only - the graded
-    // similarity paths ran interpreted HOF dot products)
-    graft.functions.GraftExtensions.installOptimizations(spark)
+    // The timed session config lives in TmpDirs.timedSessionBuilder, the
+    // one definition every driver builds from (Driver.session). AQE ON by
+    // default for the timed board (SPARK_GRAFT_AQE=0 restores Spark's
+    // stock adaptive settings): adaptive execution with post-shuffle
+    // coalescing is the production posture, and the measured A/B on the
+    // 139-seat batch slice read 57.2 s (AQE) vs 67.6 s (static) with the
+    // AQE run on the MORE degraded host. The 8 MB advisory (not the 64 MB
+    // default) keeps the genuinely heavy shuffles parallel: at 64 MB the
+    // exploded-shingle inverted-index family coalesced its REAL work to
+    // 1-2 partitions (containment 0.46 -> 1.10 s); at 8 MB the family
+    // recovers while KB-sized stages still collapse to one task.
+    // Streaming queries are unaffected (the engine disables AQE inside
+    // MicroBatchExecution). PLANS.md stays AQE-off: it audits the static
+    // optimizer's plan shape, not runtime re-planning.
+    val spark = Driver.session(aqeByDefault = true)
     // Optional comma-separated name-prefix filter for local profiling runs
     // (unset in the driver's invocation → full surface, contract
     // unchanged). Parsed HERE so the whole-board warm pass below can skip
@@ -243,7 +230,7 @@ object Bench {
       // signature set (served by both graded bandings), and the
       // approx_top_k capacity fence's distinct count. One build per
       // session by construction — the warm decides only WHERE the
-      // build lands, never how often it runs; ScaleBench keeps
+      // build lands, never how often it runs; `Probe scale` keeps
       // measuring the cold standalone cost (it clears every memo per
       // repetition). Gated on the SERVED family, not only the builder
       // seat's own name: a filtered profiling run of any family member
@@ -409,11 +396,23 @@ object Bench {
       }
     System.err.println(f"[bench] calib_stream $calibStream%.2f s")
     val selected = SparkEntry.queries.filter { case (n, _) => inFilter(n) }
+    // a seat that throws keeps its time-to-failure in "queries" (the
+    // driver's contract and the total are unchanged) but is FLAGGED:
+    // stderr plus "failed":{seat:"ErrorClass"}, so the reading is never
+    // mistaken for a fast seat
+    val failures = scala.collection.mutable.LinkedHashMap[String, String]()
     val results = selected.map { case (name, fn) =>
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+      try { fn(spark, sfDir).count() } catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: $e")
+        failures(name) = Driver.errorClass(e)
+        -1L
+      }
       name -> (System.nanoTime() - t0) / 1e9
     }
+    val failedJson = failures
+      .map { case (k, v) => s"${Driver.jsonString(k)}:${Driver.jsonString(v)}" }
+      .mkString("{", ",", "}")
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.values.sum else 0.0
@@ -517,14 +516,14 @@ object Bench {
       .mkString("{", ",", "}")
     val resampledMemoJson = resampled.keys.filter(memoBackedSeats)
       .map("\"" + _ + "\"").mkString("[", ",", "]")
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","calib":$calib,"calib_fs":$calibFs,"calib_stream":$calibStream,"resampled":$resampledJson,"resampled_memoized":$resampledMemoJson,"median_ratio_vs_floor":$medianRatioVsFloor,"queries":$qs,"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","calib":$calib,"calib_fs":$calibFs,"calib_stream":$calibStream,"resampled":$resampledJson,"resampled_memoized":$resampledMemoJson,"median_ratio_vs_floor":$medianRatioVsFloor,"failed":$failedJson,"queries":$qs,"sf":"$sfDir"}"""
     // The per-query line is one giant record whose "metric":"total" head is
     // the first thing a tail-truncated log window loses (the driver recorded
     // "parsed": null two rounds running). Print a second, SHORT, final line
     // carrying the same headline so any tail window contains a parseable
     // record; the file copy keeps the full per-query detail.
     val shortLine =
-      s"""{"metric":"total","value":$total,"unit":"sec","calib":$calib,"calib_fs":$calibFs,"calib_stream":$calibStream,"n":${results.size},"n_resampled":${resampled.size},"median_ratio_vs_floor":$medianRatioVsFloor,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","calib":$calib,"calib_fs":$calibFs,"calib_stream":$calibStream,"n":${results.size},"n_resampled":${resampled.size},"n_failed":${failures.size},"median_ratio_vs_floor":$medianRatioVsFloor,"sf":"$sfDir"}"""
     println(line)
     println(shortLine)
     // Belt-and-braces for the driver parse: stderr is a second raw channel

@@ -88,32 +88,51 @@ object TmpDirs {
     "spark.sql.streaming.checkpointFileManagerClass" ->
       "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager")
 
-  /** The bench's TIMED session configuration, in one place (r18):
-    * `local[cpus]`, shuffle width = cpus, UI off, the fast local
-    * checkpoint managers ([[localFsFastConfs]], `SPARK_GRAFT_LOCALFS_FAST=0`
+  /** The one driver session configuration (r18 for Bench, now every
+    * driver via [[graft.Driver.session]]): `local[cpus]`, shuffle width
+    * = cpus, session time zone UTC, UI off, the fast local checkpoint
+    * managers ([[localFsFastConfs]], `SPARK_GRAFT_LOCALFS_FAST=0`
     * restores stock), and the adaptive-execution posture the driver
     * times (AQE + post-shuffle coalescing to the 8 MB advisory target,
-    * `SPARK_GRAFT_AQE=0` restores static plans, `SPARK_GRAFT_AQE_ADVISORY`
-    * overrides the target). Bench, Profile and OptProbe all build from
-    * here — profiled readings must match the driver's config exactly,
-    * and three hand-maintained copies of this block had already been
-    * flagged as a drift hazard ("optimized the wrong plan"). Rationale
-    * for each value: see the comments in [[graft.Bench]]'s history. */
-  def timedSessionBuilder(cpus: String): org.apache.spark.sql.SparkSession.Builder = {
-    val builder = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    if (sys.env.getOrElse("SPARK_GRAFT_LOCALFS_FAST", "1") == "1")
-      localFsFastConfs.foreach { case (k, v) => builder.config(k, v) }
-    if (sys.env.getOrElse("SPARK_GRAFT_AQE", "1") == "1") {
-      builder.config("spark.sql.adaptive.enabled", "true")
-      builder.config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      builder.config(
-        "spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      builder.config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_ADVISORY", "8m"))
-    }
+    * `SPARK_GRAFT_AQE_ADVISORY` overrides the target). `aqeByDefault`
+    * picks what an unset `SPARK_GRAFT_AQE` means: Bench times the
+    * adaptive posture (`=0` restores Spark's stock adaptive settings),
+    * Verify grades without it (`=1` validates the timed posture). Every
+    * driver and the benchmark build from here — profiled readings must
+    * match the graded config exactly, and hand-maintained copies of this
+    * block had drifted (time zone, advisory). Rationale for each value:
+    * see the comments in [[graft.Bench]]'s history. */
+  def timedSessionBuilder(cpus: String,
+                          aqeByDefault: Boolean = true): org.apache.spark.sql.SparkSession.Builder = {
+    val builder = org.apache.spark.sql.SparkSession.builder().master(s"local[$cpus]")
+    timedConfs(cpus, aqeByDefault).foreach { case (k, v) => builder.config(k, v) }
     builder
+  }
+
+  /** The confs [[timedSessionBuilder]] sets, as data: `env` stands in
+    * for the process environment so the posture can be checked without
+    * starting a session. */
+  private[graft] def timedConfs(cpus: String, aqeByDefault: Boolean,
+                                env: Map[String, String] = sys.env): Map[String, String] = {
+    val base = Map(
+      "spark.sql.shuffle.partitions" -> cpus,
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.ui.enabled" -> "false")
+    val localFs =
+      if (env.getOrElse("SPARK_GRAFT_LOCALFS_FAST", "1") == "1") localFsFastConfs
+      else Map.empty[String, String]
+    val aqe =
+      if (env.getOrElse("SPARK_GRAFT_AQE", if (aqeByDefault) "1" else "0") == "1")
+        Map(
+          "spark.sql.adaptive.enabled" -> "true",
+          "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
+          // coalesce tiny shuffles to the TARGET SIZE (often 1 partition)
+          // instead of the core count — interleaved A/B: 57.3 -> 55.4 s
+          // over 243 batch seats, worst seat +0.004 s
+          "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false",
+          "spark.sql.adaptive.advisoryPartitionSizeInBytes" ->
+            env.getOrElse("SPARK_GRAFT_AQE_ADVISORY", "8m"))
+      else Map.empty[String, String]
+    base ++ localFs ++ aqe
   }
 }

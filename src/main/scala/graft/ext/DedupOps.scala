@@ -525,12 +525,12 @@ object DedupOps {
     * shingle counts for the near-dup gate. Memoized per (session,
     * corpus plan, n) like the MinHash signatures, so a streaming
     * ingest's micro-batches (and repeated seats over the same corpus)
-    * share one build; ScaleBench still measures the cold standalone
+    * share one build; `Probe scale` still measures the cold standalone
     * cost (it clears every memo per repetition). */
   final case class CorpusIndex(digests: DataFrame, sh: DataFrame,
                                sz: DataFrame) extends SessionMemo.Releasable {
     // sealed by persist, not checkpoint: unpersist on eviction so a
-    // long-lived session (ScaleBench clears per rep) doesn't accumulate
+    // long-lived session (`Probe scale` clears per rep) doesn't accumulate
     // orphaned cache blocks
     def release(): Unit = {
       digests.unpersist(false); sh.unpersist(false); sz.unpersist(false); ()

@@ -73,7 +73,7 @@ object Joins {
     * bucket — so the op is semantics-transparent (the oracle replays the
     * UNSALTED join). Replication costs `salts×` the build side: size it
     * to the hot keys' spread, not the cluster. AQE's skew-join split is
-    * the runtime alternative ([[graft.tools.PlanAudit]] pins it); the
+    * the runtime alternative (`Probe plans --aqe-skew` pins it); the
     * salt is the plan-level form that also works under joins AQE can't
     * split (e.g. under a required distribution). */
   def saltedJoin(probe: DataFrame, build: DataFrame,
@@ -105,14 +105,14 @@ object Joins {
     * broadcast strategy so the shuffle path — the one a too-big-to-
     * broadcast build side forces at 100 TB — is what executes. The
     * runtime split itself is asserted by SkewSpec (thresholds scaled to
-    * the fixture) and printed by `PlanAudit --aqe-skew`; at production
+    * the fixture) and printed by `Probe plans --aqe-skew`; at production
     * scale the default 256 MB threshold binds instead. */
   def skewJoinAqe(probe: DataFrame, build: DataFrame,
                   probeKey: String, buildKey: String): DataFrame =
     probe.hint("MERGE").join(build, col(probeKey) === col(buildKey))
 
   /** The SHARED injected-skew fixture behind j7b/j7c and their auditors
-    * (SkewSpec, `PlanAudit --aqe-skew`): ~90% of probe rows collapse
+    * (SkewSpec, `Probe plans --aqe-skew`): ~90% of probe rows collapse
     * onto one deterministic hot key. One definition, so the graded
     * queries and the plan/spec assertions can never drift apart. */
   def injectSkewKey(events: DataFrame): DataFrame =

@@ -25,6 +25,10 @@ for p in glob.glob(f"{sf_dir}/*.parquet"):
     con.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{p}')")
 
 oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
+# seats whose Verify run threw: they wrote no (or a partial) output dir,
+# so they must be counted here or they drop out of the count silently
+failed_path = f"{out_dir}/failed.json"
+failed = json.load(open(failed_path)) if os.path.exists(failed_path) else {}
 
 def canon(df):
     df = df.reindex(sorted(df.columns), axis=1)
@@ -53,9 +57,12 @@ def arrow_dtype_errors(sql):
             if pa.types.is_decimal(f.type)]
 
 n_ok = n_bad = 0
+for name, err in sorted(failed.items()):
+    print(f"✗ {name}: Verify failed: {err['error']}: {err['message']}")
+    n_bad += 1
 for name in sorted(os.listdir(out_dir)):
     qdir = os.path.join(out_dir, name)
-    if not os.path.isdir(qdir):
+    if not os.path.isdir(qdir) or name in failed:
         continue
     spark_df = duckdb.sql(f"SELECT * FROM read_parquet('{qdir}/*.parquet')").df()
     if name not in oracle:
