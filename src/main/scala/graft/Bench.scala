@@ -366,27 +366,24 @@ object Bench {
     // it; best of 3 in the warmed JVM, outside the timed region. Same
     // failure discipline as calib_fs: sentinel -1.0, never "fast".
     val calibStream =
-      try (1 to 3).map { i =>
+      try (1 to 3).map { _ =>
         val d = TmpDirs.create("graft_calib_stream_")
         try {
           val t0 = System.nanoTime()
           val topic = d.resolve("topic").toString
           spark.range(1000).selectExpr("id", "id * 31 AS v")
             .coalesce(1).write.parquet(topic)
-          val table = s"graft_calib_stream_$i"
-          val q = spark.readStream.schema("id BIGINT, v BIGINT")
-            .parquet(topic)
-            .groupBy(org.apache.spark.sql.functions.pmod(
-              org.apache.spark.sql.functions.col("id"),
-              org.apache.spark.sql.functions.lit(8)).as("b"))
-            .count()
-            .writeStream.format("memory").queryName(table)
-            .option("checkpointLocation", d.resolve("ckpt").toString)
-            .outputMode("complete")
-            .start()
-          try q.processAllAvailable() finally q.stop()
+          val q = graft.streaming.StreamOps.drain(
+            spark.readStream.schema("id BIGINT, v BIGINT")
+              .parquet(topic)
+              .groupBy(org.apache.spark.sql.functions.pmod(
+                org.apache.spark.sql.functions.col("id"),
+                org.apache.spark.sql.functions.lit(8)).as("b"))
+              .count(),
+            "complete", graft.streaming.StreamOps.ToMemory("graft_calib_stream"),
+            Some(d.resolve("ckpt").toString))()
           // the memory sink registers a TEMP VIEW, not a table
-          spark.catalog.dropTempView(table)
+          spark.catalog.dropTempView(q.name)
           (System.nanoTime() - t0) / 1e9
         } finally rmTree(d.toFile)
       }.min

@@ -8,10 +8,10 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    // AQE off by default = the driver's gate config; SPARK_GRAFT_AQE=1
-    // runs the dump under the SAME adaptive config the bench times, so
-    // the timed configuration is differentially validated against the
-    // DuckDB oracle too
+    // Spark's stock adaptive settings by default = the driver's gate
+    // config; SPARK_GRAFT_AQE=1 runs the dump under the SAME adaptive
+    // config the bench times, so the timed configuration is
+    // differentially validated against the DuckDB oracle too
     val spark = Driver.session(aqeByDefault = false)
     new java.io.File(outDir).mkdirs()
     // local-iteration filter, same contract as Bench's: comma-separated

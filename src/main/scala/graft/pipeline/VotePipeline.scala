@@ -135,8 +135,7 @@ object VotePipeline {
     // merge coverage, at twice the micro-batch machinery) — the records
     // never pass through the driver, unlike a MemoryStream feed.
     val topicDir = stagedWireTopic(spark, nVoters)
-    val table = StreamOps.freshName("vote_stream_tally")
-    val q = Decode.flatten(
+    val q = StreamOps.drain(Decode.flatten(
         Decode.jsonDecode(
           Decode.castValueToString(
             spark.readStream.schema("key STRING, value BINARY")
@@ -144,11 +143,9 @@ object VotePipeline {
           Schemas.VoteSchema))
       .withWatermark("voting_time", "1 hour")
       .groupBy("party_affiliation")
-      .agg(sum("vote").as("total_votes"))
-      .writeStream.format("memory").queryName(table)
-      .outputMode("complete").start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table(table)
+      .agg(sum("vote").as("total_votes")),
+      "complete", StreamOps.ToMemory("vote_stream_tally"))()
+    spark.table(q.name)
   }
 
   /** The COMPLETE re-emit loop the architecture notes specify
@@ -170,24 +167,20 @@ object VotePipeline {
     val topicDir = stagedWireTopic(spark, nVoters)
     val boardTopic = graft.TmpDirs
       .create("graft_board_topic_").toString
-    val q = Decode.flatten(
+    StreamOps.drain(Decode.flatten(
         Decode.jsonDecode(
           Decode.castValueToString(
             spark.readStream.schema("key STRING, value BINARY")
               .option("maxFilesPerTrigger", 2).parquet(topicDir)),
           Schemas.VoteSchema))
       .groupBy("candidate_id")
-      .agg(sum("vote").as("total_votes"))
-      .writeStream.outputMode("complete")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+      .agg(sum("vote").as("total_votes")),
+      "complete", StreamOps.ToBatches { (batch, _) =>
         batch.select(col("candidate_id").cast("string").as("key"),
             to_json(struct(col("candidate_id"), col("total_votes")))
               .cast("binary").as("value"))
           .write.mode("overwrite").parquet(boardTopic)
-        ()
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
+      })()
     val dim = Generator.candidatesFull(spark)
       .select(concat(lit("c"), col("candidate_id")).as("candidate_id"),
         col("candidate_name"), col("party_affiliation"))
@@ -220,11 +213,10 @@ object VotePipeline {
     // complete-mode construction.
     StreamOps.perfScope(spark, Some(4)) {
     val topicDir = stagedWireTopic(spark, nVoters)
-    val table = StreamOps.freshName("vote_live_results")
     val dim = Generator.candidatesFull(spark)
       .select(concat(lit("c"), col("candidate_id")).as("candidate_id"),
         col("candidate_name"), col("party_affiliation"))
-    val q = Decode.flatten(
+    val q = StreamOps.drain(Decode.flatten(
         Decode.jsonDecode(
           Decode.castValueToString(
             spark.readStream.schema("key STRING, value BINARY")
@@ -233,10 +225,8 @@ object VotePipeline {
       .groupBy("candidate_id")
       .agg(sum("vote").as("total_votes"))
       .join(broadcast(dim), "candidate_id")
-      .select("candidate_name", "party_affiliation", "total_votes")
-      .writeStream.format("memory").queryName(table)
-      .outputMode("complete").start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table(table)
+      .select("candidate_name", "party_affiliation", "total_votes"),
+      "complete", StreamOps.ToMemory("vote_live_results"))()
+    spark.table(q.name)
   }
 }

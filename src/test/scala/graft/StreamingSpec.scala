@@ -1099,4 +1099,44 @@ class StreamingSpec extends SparkSpec {
     // (planted exact-dup texts collapse too)
     assert(out === want)
   }
+
+  test("t12 over a MULTI-PART documents table streams every part: counts " +
+       "equal the batch gates") {
+    import spark.implicits._
+    // the tools.ScaleUp shape: documents.parquet as a 3-part DIRECTORY
+    // (a symlinked directory would stream zero rows)
+    val dir = TmpDirs.create("graft_docs3_").toString
+    Tables.documents(spark, sfDir).repartition(3)
+      .write.parquet(s"$dir/documents.parquet")
+    assert(new java.io.File(s"$dir/documents.parquet").listFiles()
+      .count(_.getName.endsWith(".parquet")) == 3)
+    val streamed = StreamOps.streamingQualityGate(spark, dir, Some(4))
+      .as[(String, Long)].collect().toMap
+    val batch = Tables.documents(spark, sfDir)
+      .filter(graft.ext.TextOps.isEnglishPredicate &&
+        graft.ext.TextOps.qualityOkPredicate)
+      .groupBy("lang").agg(count(lit(1))).as[(String, Long)].collect().toMap
+    assert(batch.nonEmpty)
+    assert(streamed === batch)
+  }
+
+  test("warmStagedLayouts builds every staged layout: no streaming seat " +
+       "stages a new one after it") {
+    val root = TmpDirs.create("graft_warm_probe_").getParent
+    def stageDirs(): Set[String] =
+      Option(root.toFile.listFiles()).getOrElse(Array.empty)
+        .map(_.getName).filter(_.contains("_stage_")).toSet
+    StreamOps.warmStagedLayouts(spark, sfDir)
+    val warmed = stageDirs()
+    // the streaming seats, selected as Bench gates its streaming warm
+    val seats = SparkEntry.queries.toSeq.filter { case (n, _) =>
+      n.matches("^t\\d.*") || n.startsWith("s8") || n.startsWith("s9") ||
+        n.startsWith("s10") || n.contains("vote_e2e") }
+    assert(seats.size > 50)
+    seats.foreach { case (n, fn) =>
+      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      val fresh = stageDirs() -- warmed
+      assert(fresh.isEmpty, s"$n staged $fresh outside warmStagedLayouts")
+    }
+  }
 }
